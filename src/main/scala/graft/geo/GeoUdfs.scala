@@ -65,19 +65,10 @@ object GeoUdfs {
           .createPoint(new org.locationtech.jts.geom.Coordinate(x, y)))
     }
 
-  /** Full WGS84 ring reprojection → GeoJSON (ETL.py:437–451 composed),
-    * 6-decimal formatting.
-    */
-  val stReprojectGeoJson =
-    udf { (wkt: String) =>
-      Jts.toGeoJson(Jts.reprojectToWgs84(Jts.envelopePolygon(Jts.parseWkt(wkt))), decimals = 6)
-    }
-
   def st_envelope(c: Column): Column = stEnvelope(c)
   def st_envelope_geojson(c: Column): Column = stEnvelopeGeoJson(c)
   def st_reproject_bbox(xmin: Column, ymin: Column, xmax: Column, ymax: Column): Column =
     stReprojectBbox(xmin, ymin, xmax, ymax)
   def st_contains_point(wkt: Column, x: Column, y: Column): Column =
     stContainsPoint(wkt, x, y)
-  def st_reproject_geojson(c: Column): Column = stReprojectGeoJson(c)
 }

@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Session extension installer (SURVEY.md §7.3): registers graft's
   * native expressions and plan-level operators so any session —
@@ -66,5 +67,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         FingerprintSet(es.head)))
     ext.injectPostHocResolutionRule(_ => new ResolveAsOfJoin)
     ext.injectOptimizerRule(_ => new RewriteRangeJoin)
+  }
+}
+
+object GraftExtensions {
+
+  /** Register a kernel as a temp function unless the session already
+    * has one by that name (injected by `GraftExtensions` at build time,
+    * or registered by an earlier query build), so repeated query builds
+    * neither replace the function nor log that they did. Sessions built
+    * without the extension still get the kernel on first use.
+    */
+  private[plans] def registerOnce(spark: SparkSession, name: String, source: String)(
+      build: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, build, source)
   }
 }

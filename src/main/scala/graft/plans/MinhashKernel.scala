@@ -145,6 +145,5 @@ case class MinhashBands(child: Expression) extends UnaryExpression {
 object MinhashKernel {
   /** Register the kernel as a temp function on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands", es => MinhashBands(es.head), "scala_udf")
+    GraftExtensions.registerOnce(spark, "minhash_bands", "scala_udf")(es => MinhashBands(es.head))
 }

@@ -16,10 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object NativeBloom {
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      es => new BloomFilterAggregate(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("might_contain",
-      es => new BloomFilterMightContain(es(0), es(1)), "built-in")
+    GraftExtensions.registerOnce(spark, "bloom_filter_agg", "built-in")(
+      es => new BloomFilterAggregate(es(0), es(1), es(2)))
+    GraftExtensions.registerOnce(spark, "might_contain", "built-in")(
+      es => new BloomFilterMightContain(es(0), es(1)))
   }
 }

@@ -68,6 +68,5 @@ object NztmToWgs84 {
 
   /** Register on an existing session (tests / query packs). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nztm_to_wgs84", build, "scala_udf")
+    GraftExtensions.registerOnce(spark, "nztm_to_wgs84", "scala_udf")(build)
 }

@@ -91,6 +91,5 @@ case class FingerprintSet(child: Expression) extends UnaryExpression {
 object TextKernels {
   /** Register the kernels as temp functions on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fingerprint_set", es => FingerprintSet(es.head), "scala_udf")
+    GraftExtensions.registerOnce(spark, "fingerprint_set", "scala_udf")(es => FingerprintSet(es.head))
 }

@@ -217,13 +217,9 @@ case class VecBands(child: Expression) extends UnaryExpression {
 object VecKernels {
   /** Register the kernels as temp functions on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", es => VecDot(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_idot", es => VecDotI64(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_bucket", es => VecBucket(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_bands", es => VecBands(es.head), "scala_udf")
+    GraftExtensions.registerOnce(spark, "vec_dot", "scala_udf")(es => VecDot(es(0), es(1)))
+    GraftExtensions.registerOnce(spark, "vec_idot", "scala_udf")(es => VecDotI64(es(0), es(1)))
+    GraftExtensions.registerOnce(spark, "vec_bucket", "scala_udf")(es => VecBucket(es.head))
+    GraftExtensions.registerOnce(spark, "vec_bands", "scala_udf")(es => VecBands(es.head))
   }
 }

@@ -18,9 +18,9 @@ package graft.raster
   * The reference never touches pixels in-language (arcpy streams
   * file→file); here the grid is a first-class typed record so clipping
   * and statistics are native columnar operations. At scale a grid
-  * travels as one row (`binaryFile` source → parse) — a 500 m NZ-wide
-  * grid is ~5 MB of text, far under per-row limits, and per-file
-  * parallelism is the natural partitioning.
+  * travels as one row (asciigrid source → parse) — a 500 m NZ-wide
+  * grid of 2,000 × 2,900 cells is about 34 MB of text, under per-row
+  * limits, and per-file parallelism is the natural partitioning.
   */
 case class AsciiGrid(
     ncols: Int,
@@ -48,42 +48,16 @@ case class AsciiGrid(
 
 object AsciiGrid {
 
-  /** Parse the textual format. Header keys are case-insensitive and
-    * order-tolerant (matching common producers); values may span lines.
+  /** Parse the textual format: the header (see `parseHeader`), then
+    * the whitespace-separated cell values, which may span lines.
     */
   def parse(text: String): AsciiGrid = {
-    val tokens = text.split("\\s+").filter(_.nonEmpty)
+    val (h, cellsAt) = readHeader(text)
+    val tokens = text.substring(cellsAt).split("\\s+").filter(_.nonEmpty)
+    val values = new Array[Double](tokens.length)
     var i = 0
-    var ncols, nrows = -1
-    var xll, yll, cell = Double.NaN
-    var nodata = -9999.0
-    var parsingHeader = true
-    // center→corner offsets resolved AFTER the loop: cellsize legally
-    // follows the xllcenter/yllcenter lines in standard ESRI headers
-    var xCenter, yCenter = false
-    val headerKeys = Set("ncols", "nrows", "xllcorner", "yllcorner",
-      "xllcenter", "yllcenter", "cellsize", "nodata_value")
-    while (parsingHeader && i + 1 < tokens.length) {
-      tokens(i).toLowerCase match {
-        case "ncols"        => ncols = tokens(i + 1).toInt; i += 2
-        case "nrows"        => nrows = tokens(i + 1).toInt; i += 2
-        case "xllcorner"    => xll = tokens(i + 1).toDouble; xCenter = false; i += 2
-        case "xllcenter"    => xll = tokens(i + 1).toDouble; xCenter = true; i += 2
-        case "yllcorner"    => yll = tokens(i + 1).toDouble; yCenter = false; i += 2
-        case "yllcenter"    => yll = tokens(i + 1).toDouble; yCenter = true; i += 2
-        case "cellsize"     => cell = tokens(i + 1).toDouble; i += 2
-        case "nodata_value" => nodata = tokens(i + 1).toDouble; i += 2
-        case _              => parsingHeader = false
-      }
-      if (i < tokens.length && !headerKeys.contains(tokens(i).toLowerCase))
-        parsingHeader = false
-    }
-    if (xCenter) xll -= 0.5 * cell
-    if (yCenter) yll -= 0.5 * cell
-    val values = new Array[Double](tokens.length - i)
-    var j = 0
-    while (i < tokens.length) { values(j) = tokens(i).toDouble; i += 1; j += 1 }
-    AsciiGrid(ncols, nrows, xll, yll, cell, nodata, values)
+    while (i < tokens.length) { values(i) = tokens(i).toDouble; i += 1 }
+    AsciiGrid(h.ncols, h.nrows, h.xllcorner, h.yllcorner, h.cellsize, h.nodata, values)
   }
 
   /** Header fields only (no cell block). `parseHeader` powers pruned
@@ -97,7 +71,13 @@ object AsciiGrid {
   private val HeaderKeys = Set("ncols", "nrows", "xllcorner", "yllcorner",
     "xllcenter", "yllcenter", "cellsize", "nodata_value")
 
-  def parseHeader(text: String): Header = {
+  /** The header: one `key value` pair per line, keys case-insensitive
+    * and in any order, up to the first other non-blank line.
+    */
+  def parseHeader(text: String): Header = readHeader(text)._1
+
+  /** The header and the offset of the line where the cells begin. */
+  private def readHeader(text: String): (Header, Int) = {
     // two-pass: record raw values first, resolve the center→corner
     // offset AFTER the loop — cellsize legally appears after the
     // xllcenter/yllcenter lines in standard ESRI headers, so computing
@@ -106,10 +86,12 @@ object AsciiGrid {
     var xll, yll, cell = Double.NaN
     var xCenter, yCenter = false
     var nodata = -9999.0
-    val lines = text.linesIterator
+    var at = 0
     var parsing = true
-    while (parsing && lines.hasNext) {
-      val toks = lines.next().trim.split("\\s+").filter(_.nonEmpty)
+    while (parsing && at < text.length) {
+      var eol = at
+      while (eol < text.length && text.charAt(eol) != '\n' && text.charAt(eol) != '\r') eol += 1
+      val toks = text.substring(at, eol).trim.split("\\s+").filter(_.nonEmpty)
       if (toks.length >= 2 && HeaderKeys.contains(toks(0).toLowerCase)) {
         toks(0).toLowerCase match {
           case "ncols"        => ncols = toks(1).toInt
@@ -122,10 +104,11 @@ object AsciiGrid {
           case "nodata_value" => nodata = toks(1).toDouble
         }
       } else if (toks.nonEmpty) parsing = false
+      if (parsing) at = math.min(eol + 1, text.length)
     }
     if (xCenter) xll -= 0.5 * cell
     if (yCenter) yll -= 0.5 * cell
-    Header(ncols, nrows, xll, yll, cell, nodata)
+    (Header(ncols, nrows, xll, yll, cell, nodata), at)
   }
 
   /** Render back to the textual format (row-major, one row per line).

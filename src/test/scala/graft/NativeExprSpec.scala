@@ -40,6 +40,21 @@ class NativeExprSpec extends AnyFunSuite {
     assert(math.abs(ll.getDouble(1) - 173.0) < 1e-9)
   }
 
+  test("plans kernels register once per session: repeat query builds " +
+    "keep the first builder, injected ones included") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    def builder(name: String) =
+      registry.lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get
+    graft.plans.NativeBloom.register(s)
+    val bloom = builder("might_contain")
+    val vecDot = builder("vec_dot") // injected by GraftExtensions
+    graft.plans.NativeBloom.register(s)
+    graft.plans.VecKernels.register(s)
+    assert(builder("might_contain") eq bloom)
+    assert(builder("vec_dot") eq vecDot)
+  }
+
   test("expression matches the Scala kernel across a coordinate grid") {
     import spark.implicits._
     val pts = (for {

@@ -2,18 +2,26 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
 import java.util.zip.ZipFile
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 import graft.etl.{Lookups, Pipeline}
-import graft.raster.{AsciiGrid, GridGen}
+import graft.raster.{AsciiGrid, GeoTiff, GridGen}
 
 /** End-to-end pipeline golden test (FIXTURES.md §B): synthesizes an
   * .asc input tree following the reference's filename grammar and
   * region-code directory convention, runs the full composed pipeline,
   * and checks catalog, zips, and metadata JSON field-by-field.
   */
-class PipelineSpec extends SparkSpecBase {
+class PipelineSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   private lazy val work = Files.createTempDirectory("graft-pipeline").toString
 
@@ -205,5 +213,113 @@ class PipelineSpec extends SparkSpecBase {
       }
     }
     assert(checked, "expected a Gisborne Mean-Air-Temperature doc")
+  }
+
+  // ---- content pin: the products' bytes, recorded before the pipeline
+  // core was restructured. Input: the three GridGen grids above plus
+  // GridGen grid 3 with its first valid cell written as "-0.0", under
+  // the same regions. Zip containers stamp entry times, so entries are
+  // compared, not containers.
+
+  private val NegZeroStem = "Mean-Daily-Maximum-Air-Temperature_Mean_1991-2020_January"
+
+  private def negZeroText: String = {
+    val g = GridGen.gen(3)
+    val cells = g.values.map(_.toLong.toString)
+    cells(g.values.indexWhere(_ != GridGen.Nodata)) = "-0.0"
+    AsciiGrid.write(g).linesIterator.take(6).mkString("", "\n", "\n") +
+      cells.grouped(g.ncols).map(_.mkString(" ")).mkString("", "\n", "\n")
+  }
+
+  private lazy val pinOut: String = {
+    val in = Paths.get(work, "pin-in")
+    val files = Seq(
+      ("05", "grid_02_NZ_norm_Mean_1991-2020_monthly7", GridGen.genText(0)),
+      ("13", "grid_00_NZ_norm_Mean_1991-2020_annual", GridGen.genText(1)),
+      ("01", "grid_09_NZ_norm_StdDev_1991-2020_seasonal2", GridGen.genText(2)),
+      ("09", "grid_03_NZ_norm_Mean_1991-2020_monthly1", negZeroText))
+    files.foreach { case (region, base, text) =>
+      Files.createDirectories(in.resolve(region))
+      Files.write(in.resolve(region).resolve(s"$base.asc"), text.getBytes(StandardCharsets.UTF_8))
+    }
+    val out = s"$work/pin-out"
+    Pipeline.run(spark, in.toString, regionsDf, out, updatedAt = "2026-01-01T00:00:00Z")
+    out
+  }
+
+  /** Every zip entry and every .json doc of a run as (name, bytes). */
+  private def outputFiles(outDir: String): Seq[(String, Array[Byte])] =
+    Paths.get(outDir, "zipped").toFile.listFiles.toSeq.flatMap { f =>
+      if (f.getName.endsWith(".zip")) {
+        val z = new ZipFile(f)
+        try z.entries().asScala.map(e => e.getName -> z.getInputStream(e).readAllBytes()).toList
+        finally z.close()
+      } else if (f.getName.endsWith(".json")) Seq(f.getName -> Files.readAllBytes(f.toPath))
+      else Nil
+    }
+
+  private def sha256(b: Array[Byte]): String =
+    MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+
+  test("content pin: every zip entry and .json doc is byte-identical") {
+    // per kind: file count and the SHA-256 of its sorted "name sha" lines
+    val got = outputFiles(pinOut)
+      .groupBy { case (n, _) => n.replaceAll("^.*?(\\.[a-z.]+)$", "$1") }
+      .map { case (kind, fs) =>
+        kind -> s"${fs.size}:${sha256(fs.map { case (n, b) => s"$n ${sha256(b)}" }
+          .sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))}"
+      }
+    assert(got == Map(
+      ".asc" -> "64:5933212f8c5abd7cb4be1bdb827dd04a21ac3eb741fc8b59044ece24727980eb",
+      ".wld" -> "64:fc8b765bd5573b750265db4fe562f5e552b0b5846962bcd93ec41557196e4ff3",
+      ".stats.txt" -> "64:07431417b4c0c5eb6feaacb1e7f89434887ea915d06d5a882b9049dcc1e0eea7",
+      ".tif" -> "64:e61556fdc63c6f35207ede44dd2f27e6250e66d8cb0fa9f7ffd93268b8417b44",
+      ".json" -> "64:feb9f431ec09cf1c558c44c3cf005af6ce32cc9a68c468cc03f8110bbaeaf293"), s"got: $got")
+  }
+
+  test("content pin: catalog parquet schema (names, types, order)") {
+    val schema = spark.read.parquet(s"$pinOut/catalog.parquet").schema.fields
+      .map(f => s"${f.name}:${f.dataType.simpleString}").toSeq
+    assert(schema == Seq(
+      "base_name:string", "new_file_name:string", "clipped_name:string",
+      "region_code:string", "region_name:string", "region_title:string",
+      "ncols_out:int", "nrows_out:int", "n_valid:bigint", "n_nodata:bigint",
+      "sum_valid:double", "clipped_text:string", "stats_text:string",
+      "metadata_json:string", "file_stem:string"), s"got: $schema")
+  }
+
+  test("content pin: .tif samples are the float32 bits of the zipped .asc " +
+    "values (a -0.0 source cell is +0 in both)") {
+    val files = outputFiles(pinOut).toMap
+    def bits(vs: Array[Double]) = vs.map(v => java.lang.Float.floatToRawIntBits(v.toFloat)).toSeq
+    var negZeroChecked = 0
+    files.foreach { case (name, bytes) =>
+      if (name.endsWith(".tif") && bytes.nonEmpty) {
+        val asc = AsciiGrid.parse(new String(files(name.stripSuffix(".tif") + ".asc"), "UTF-8"))
+        val tif = GeoTiff.read(bytes)
+        assert(bits(tif.grid.values) == bits(asc.values), s"sample bits drift in $name")
+        if (name.startsWith(NegZeroStem)) {
+          assert(asc.values.contains(0.0), s"$name lost the -0.0 source cell")
+          negZeroChecked += 1
+        }
+      }
+    }
+    assert(negZeroChecked == 15, s"checked $negZeroChecked products of the -0.0 grid")
+  }
+
+  test("plan pin: each grid is parsed once, below the cross join, on its " +
+    "streamed side, and its text does not cross the join") {
+    val plan = Pipeline.products(spark, Pipeline.sourceFiles(spark, inputDir), regionsDf,
+      "climate/grids", "2026-01-01T00:00:00Z").queryExecution.executedPlan
+    val joins = collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1, s"plan:\n$plan")
+    val join = joins.head
+    assert(join.buildSide == BuildRight, s"plan:\n$plan")
+    def udfNames(p: SparkPlan): Seq[String] =
+      collect(p) { case n => n.expressions.flatMap(_.collect { case u: ScalaUDF => u.udfName }) }
+        .flatten.flatten
+    assert(!join.left.output.exists(_.name == "text"), s"text crosses the join:\n$plan")
+    assert(udfNames(join.left).count(_ == "parse_grid") == 1, s"plan:\n$plan")
+    assert(udfNames(plan).count(_ == "parse_grid") == 1, s"plan:\n$plan")
   }
 }

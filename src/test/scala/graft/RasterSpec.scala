@@ -94,6 +94,14 @@ class RasterSpec extends AnyFunSuite {
     assert(g.xllcorner == 95.0 && g.yllcorner == 195.0, s"${g.xllcorner},${g.yllcorner}")
     val h = AsciiGrid.parseHeader(text)
     assert(h.xllcorner == 95.0 && h.yllcorner == 195.0, s"${h.xllcorner},${h.yllcorner}")
+    // Windows (CRLF) and classic-Mac (CR) line ends read the same
+    Seq("\r\n", "\r").foreach { eol =>
+      val g2 = AsciiGrid.parse(text.replace("\n", eol))
+      def fields(x: AsciiGrid) = (x.ncols, x.nrows, x.xllcorner, x.yllcorner, x.cellsize, x.nodata)
+      assert(fields(g2) == fields(g) && g2.values.sameElements(g.values),
+        s"line end ${eol.map(_.toInt)}")
+      assert(AsciiGrid.parseHeader(text.replace("\n", eol)) == h)
+    }
   }
 
   test("VecSumAgg tolerates ragged vectors without truncation or crash") {

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * q_pack_sequences chunked prefix sums) pinned row-identical to their
   * window-route twins — including degenerate gate parameters that force
   * band/chunk boundaries through the middle of every group — and the
-  * q_skew_join_aqe fresh-scan dim pinned against the old lineage dim.
+  * q_skew_join_aqe fresh-scan dim's key set pinned against the old
+  * lineage dim's.
   */
 class Round21OpsSpec extends SparkSpecBase {
 
@@ -104,9 +105,15 @@ class Round21OpsSpec extends SparkSpecBase {
 
   test("q_skew_join_aqe: fresh-scan dim is row-identical to the lineage " +
     "dim (same distinct key set)") {
-    val fresh = rows("q_skew_join_aqe")
-    assert(fresh.nonEmpty)
-    assert(rows("q_skew_join_aqe",
-      "spark.graft.skewaqe.dimShape" -> "lineage") === fresh)
+    assert(rows("q_skew_join_aqe").nonEmpty)
+    // the query's key rule over a fresh scan (its dim) and over the
+    // repartitioned fact (the lineage dim it replaced)
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select(when(col("l_orderkey") % 10 < 8, 0L).otherwise(col("l_orderkey")).as("k"))
+    val lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
+    val fact = keys(lineitem.repartition(8))
+    val fresh = keys(lineitem).distinct()
+    assert(fresh.count() > 1)
+    assert(fresh.collect().toSet == fact.select("k").distinct().collect().toSet)
   }
 }

@@ -32,11 +32,24 @@ object RoundTripProps extends Properties("graft") {
   } yield AsciiGrid(ncols, nrows, xll, yll, cell, -9999.0, values.toArray)
 
   property("asciiGrid.writeParseIdentity") = Prop.forAll(gridGen) { g =>
-    val g2 = AsciiGrid.parse(AsciiGrid.write(g))
+    val text = AsciiGrid.write(g)
+    val g2 = AsciiGrid.parse(text)
+    // the same grid with a centre-convention header: xllcenter and
+    // yllcenter ahead of cellsize, as standard ESRI headers order them
+    val centred = text
+      .replaceFirst("xllcorner \\S+", s"xllcenter ${g.centerX(0)}")
+      .replaceFirst("yllcorner \\S+", s"yllcenter ${g.centerY(g.nrows - 1)}")
+    def header(x: AsciiGrid) = AsciiGrid.Header(x.ncols, x.nrows, x.xllcorner,
+      x.yllcorner, x.cellsize, x.nodata)
     g2.ncols == g.ncols && g2.nrows == g.nrows &&
       g2.xllcorner == g.xllcorner && g2.yllcorner == g.yllcorner &&
       g2.cellsize == g.cellsize && g2.nodata == g.nodata &&
-      g2.values.sameElements(g.values)
+      g2.values.sameElements(g.values) &&
+      header(g2) == AsciiGrid.parseHeader(text) &&
+      centred.indexOf("xllcenter") < centred.indexOf("cellsize") &&
+      header(AsciiGrid.parse(centred)) == AsciiGrid.parseHeader(centred) &&
+      math.abs(AsciiGrid.parse(centred).xllcorner - g.xllcorner) < 1e-6 &&
+      AsciiGrid.parse(centred).values.sameElements(g.values)
   }
 
   private val grammarGen: Gen[String] = for {
